@@ -21,8 +21,11 @@ filter:
 detect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli detect --config $(CONFIG)
 
+# the tier-1 gate (ROADMAP.md), then the Spark-free benchmark self-tests
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	python -m pytest perfbench/tests -q
 
 parity:
 	SPARK_GRAFT_TEST_SF=$(SF) python -m pytest tests/test_oracle_parity.py -q

@@ -2,13 +2,18 @@
 
     collect     Prometheus range scan -> aligned wide parquet   (§3.1)
     preprocess  NaN strategy + scaler -> processed parquet      (§3.2)
-    train       windows -> autoencoder + threshold artifacts    (§3.3)
+    train       windows -> LSTM autoencoder + threshold         (§3.3)
     filter      score all windows, split normal/anomalous       (filter_anomalous_data)
     detect      streaming detector + exporter                   (§3.4)
 
 Unlike the reference (subprocess per stage, cli.py:7-12), stages here
 are library calls sharing one SparkSession — no process boundary, one
 Catalyst-planned job graph per stage.
+
+``train`` fits the paper's one model, the LSTM autoencoder
+(train_autoencoder.py:76-91), and stores its weights with the p95 of
+its validation-window errors as the threshold.  ``filter`` loads both
+(filter_anomalous_data.py:43-55) and refuses to run without them.
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ import argparse
 import json
 import os
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from .config import EngineConfig, load_config, validate_periods
@@ -27,6 +33,7 @@ from .operators.align import metrics_wide
 from .operators.windows import sequence_windows_scalable
 from .functions import hour_of_day, weekday_mon0
 from .session import get_spark
+from .shipping import ensure_shipped
 from .sources.prometheus import PrometheusDataSource
 
 
@@ -37,6 +44,9 @@ def _art(cfg: EngineConfig, name: str) -> str:
 
 def cmd_collect(cfg: EngineConfig) -> None:
     spark = get_spark("collect")
+    # the source's reader runs on the Python workers, which import it
+    # by module path
+    ensure_shipped(spark)
     spark.dataSource.register(PrometheusDataSource)
     periods = validate_periods(cfg.collection_periods_iso)
     frames = []
@@ -96,15 +106,9 @@ def cmd_preprocess(cfg: EngineConfig, input_path: str | None = None) -> None:
 
 
 def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
-    from .ml.train import (
-        collect_windows,
-        fit_threshold,
-        save_artifacts,
-        train_linear_autoencoder,
-        train_val_split,
-    )
-    from .ml.infer import score_windows
-    from .ml.train import LinearAutoencoder
+    from .ml.infer import reconstruction_errors
+    from .ml.lstm_train import train_lstm_autoencoder
+    from .ml.train import collect_windows, save_artifacts, train_val_split
 
     spark = get_spark("train")
     path = input_path or _art(cfg, cfg.processed_output_filename)
@@ -114,77 +118,44 @@ def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
     train_df, val_df = train_val_split(windows, cfg.train_split_ratio)
     x_train = collect_windows(train_df)
     x_val = collect_windows(val_df)
-    if cfg.model_type == "lstm":
-        from .ml.lstm_np import LSTMAutoencoder
-        from .ml.lstm_train import train_lstm_autoencoder
-
-        model, history = train_lstm_autoencoder(
-            x_train,
-            epochs=cfg.epochs,
-            lr=cfg.learning_rate,
-            patience=cfg.early_stopping_patience,
-            val=x_val,
-        )
-        trained_w = model.w
-        factory = lambda: LSTMAutoencoder(trained_w)  # noqa: E731
-    else:
-        model, history = train_linear_autoencoder(
-            x_train,
-            epochs=cfg.epochs,
-            patience=cfg.early_stopping_patience,
-            val=x_val,
-        )
-        a_fit, b_fit = model.a, model.b
-        factory = lambda: LinearAutoencoder(a=a_fit, b=b_fit)  # noqa: E731
-    # the persisted threshold must describe the SAME model as the
-    # persisted weights: score validation windows with the trained
-    # model (weights captured in the factory closure, rebuilt per task)
-    scored = score_windows(val_df if x_val.size else train_df, factory)
-    threshold = fit_threshold(scored.select("mse"), 0.95)
-    # scaler params were already persisted by the preprocess stage
-    save_artifacts(cfg.artifacts_dir, model, history, None, threshold)
+    model, history = train_lstm_autoencoder(
+        x_train,
+        epochs=cfg.epochs,
+        lr=cfg.learning_rate,
+        patience=cfg.early_stopping_patience,
+        val=x_val,
+    )
+    # A11: p95 of the TRAINED model's validation-window errors, so the
+    # stored threshold describes the stored weights (config.yaml:113-118
+    # documents the practice but leaves it manual)
+    mse, _ = reconstruction_errors(model, x_val if x_val.size else x_train)
+    save_artifacts(
+        cfg.artifacts_dir, model, history, float(np.percentile(mse, 95))
+    )
 
 
 def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
-    from .ml.autoencoder import StubAutoencoder
     from .ml.infer import score_windows
-    from .ml.train import LinearAutoencoder
+    from .ml.lstm_np import LSTMAutoencoder
+
+    weights_path = os.path.join(cfg.artifacts_dir, "autoencoder_weights.npz")
+    meta_path = os.path.join(cfg.artifacts_dir, "training_meta.json")
+    missing = [p for p in (weights_path, meta_path) if not os.path.exists(p)]
+    if missing:
+        raise SystemExit(
+            f"filter needs the artifacts of the `train` stage (missing: "
+            f"{', '.join(missing)}); run `train` first"
+        )
+    model = LSTMAutoencoder.load(weights_path)
+    with open(meta_path) as fh:
+        threshold = json.load(fh)["threshold"]
 
     spark = get_spark("filter")
     path = input_path or _art(cfg, cfg.processed_output_filename)
     df = spark.read.parquet(path)
     features = [c for c in df.columns if c != "ts"]
     windows = sequence_windows_scalable(df, features, cfg.sequence_length)
-    # prefer the threshold fitted by `train` (p95 of validation errors,
-    # training_meta.json) over the hand-tuned config constant — the
-    # reference documents this practice but leaves it manual
-    # (config.yaml:113-118)
-    threshold = cfg.anomaly_threshold_mse
-    meta_path = os.path.join(cfg.artifacts_dir, "training_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            threshold = json.load(fh).get("threshold", threshold)
-    # score with the trained weights when the train stage ran (the
-    # threshold from training_meta.json describes THAT model); fall
-    # back to the deterministic stub otherwise.  The npz key layout
-    # identifies the model family (a/b = linear, enc*/dec* = LSTM).
-    weights_path = os.path.join(cfg.artifacts_dir, "autoencoder_weights.npz")
-    if os.path.exists(weights_path):
-        import numpy as np
-
-        with np.load(weights_path) as npz:
-            keys = set(npz.files)
-            arrays = {k: npz[k] for k in npz.files}
-        if keys == {"a", "b"}:
-            a_fit, b_fit = arrays["a"], arrays["b"]
-            factory = lambda: LinearAutoencoder(a=a_fit, b=b_fit)  # noqa: E731
-        else:
-            from .ml.lstm_np import LSTMAutoencoder
-
-            factory = lambda: LSTMAutoencoder(arrays)  # noqa: E731
-    else:
-        factory = lambda: StubAutoencoder()  # noqa: E731
-    scored = score_windows(windows, factory).withColumn(
+    scored = score_windows(windows, lambda: model).withColumn(
         "is_anomaly",
         (F.col("mse") > F.lit(threshold)).cast("int"),
     )

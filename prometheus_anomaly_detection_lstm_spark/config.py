@@ -53,9 +53,6 @@ class EngineConfig:
     batch_size: int = 64
     learning_rate: float = 0.001
     early_stopping_patience: int = 10
-    #: "lstm" = NumPy BPTT on the reference architecture (ml/lstm_train);
-    #: "linear" = the fast deterministic affine autoencoder
-    model_type: str = "lstm"
     # real_time_anomaly_detection
     query_interval_seconds: int = 30
     anomaly_threshold_mse: float = 0.0025
@@ -102,7 +99,6 @@ def load_config(path: str | None = None, data: dict | None = None) -> EngineConf
         batch_size=ts.get("batch_size", 64),
         learning_rate=ts.get("learning_rate", 0.001),
         early_stopping_patience=ts.get("early_stopping_patience", 10),
-        model_type=ts.get("model_type", "lstm"),
         query_interval_seconds=parse_duration_seconds(
             rt.get("query_interval_seconds", 30), 30
         ),

@@ -9,7 +9,9 @@ Arrow-batched ``mapInPandas`` — per-window MSE (A6) and per-feature MSE
 
 Works with any scorer exposing ``predict(x: (n, L, F)) -> (n, L, F)``;
 the deterministic :class:`~..ml.autoencoder.StubAutoencoder` in tests,
-a Keras LSTM in production (weights -> broadcast, rebuild per executor).
+the trained NumPy LSTM (``ml/lstm_np.py``) in the lifecycle.
+:func:`reconstruction_errors` is the one statement of the error math:
+the training threshold and the streaming detector call it too.
 """
 
 from __future__ import annotations
@@ -26,6 +28,17 @@ SCORE_SCHEMA = (
 )
 
 
+def reconstruction_errors(
+    model, x: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(n, L, F) windows -> per-window MSE (n,) over (time, feature)
+    (A6, train_autoencoder.py:277-278) and per-feature MSE (n, F) over
+    time (A8, realtime_detector.py:309-311)."""
+    err = x - model.predict(x)
+    sq = err * err
+    return sq.mean(axis=(1, 2)), sq.mean(axis=1)
+
+
 def score_windows(
     windows: DataFrame,
     model_factory: Callable[[], object],
@@ -34,8 +47,8 @@ def score_windows(
     """(window_id, start_ts, features) -> per-window MSE + per-feature MSE.
 
     ``model_factory`` must be picklable and cheap; it is invoked once
-    per task (e.g. ``lambda: StubAutoencoder()`` or a closure that
-    rebuilds Keras from broadcast weights).  The package is shipped to
+    per task (e.g. ``lambda: StubAutoencoder()`` or a closure over a
+    trained ``LSTMAutoencoder``).  The package is shipped to
     executors first — factories referencing package classes unpickle by
     module path on the Python worker.
 
@@ -65,15 +78,13 @@ def score_windows(
                 [np.stack(w).astype("float64", copy=False)
                  for w in pdf["features"]]
             )
-            recon = model.predict(x)
-            err = x - recon
-            sq = err * err
+            mse, feature_mse = reconstruction_errors(model, x)
             yield pd.DataFrame(
                 {
                     "window_id": pdf["window_id"],
                     "start_ts": pdf["start_ts"],
-                    "mse": sq.mean(axis=(1, 2)),
-                    "feature_mse": list(sq.mean(axis=1)),
+                    "mse": mse,
+                    "feature_mse": list(feature_mse),
                 }
             )
 

@@ -32,8 +32,6 @@ with layers ``enc1``, ``enc2``, ``dec1``, ``dec2``.
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 
 #: reference defaults: config lstm_units_encoder1/encoder2_latent
@@ -132,17 +130,6 @@ class LSTMAutoencoder:
         return _sigmoid(d2 @ w["dense_W"] + w["dense_b"])
 
     # ---------------------------------------------------- npz artifacts
-
-    def to_npz_bytes(self) -> bytes:
-        """Serialize for the model sink (S10 artifact discipline)."""
-        buf = io.BytesIO()
-        np.savez(buf, **self.w)
-        return buf.getvalue()
-
-    @classmethod
-    def from_npz_bytes(cls, data: bytes) -> "LSTMAutoencoder":
-        with np.load(io.BytesIO(data)) as npz:
-            return cls({k: npz[k] for k in npz.files})
 
     def save(self, path: str) -> None:
         np.savez(path, **self.w)

@@ -107,23 +107,12 @@ def forward_with_caches(weights: dict, x: np.ndarray):
     return y, (c1, c2, c3, c4, h4, y)
 
 
-def loss_and_grads(weights: dict, x: np.ndarray, denom: float | None = None):
-    """MSE-loss partials + analytical gradients for every weight.
-
-    With the default ``denom`` (= x.size) this is the full-batch loss
-    and gradient.  Passing the GLOBAL element count as ``denom`` while
-    ``x`` is one partition's slice makes the returned grads a partial
-    sum: summing them across partitions reproduces the full-batch
-    gradient exactly (up to float summation order) — the contract the
-    distributed trainer relies on.  In that mode the returned "loss" is
-    sum((y-x)^2) / denom, i.e. a partial of the global mean.
-    """
+def loss_and_grads(weights: dict, x: np.ndarray):
+    """Full-batch MSE loss + analytical gradients for every weight."""
     y, (c1, c2, c3, c4, h4, _) = forward_with_caches(weights, x)
-    n, length, feats = x.shape
-    if denom is None:
-        denom = float(n * length * feats)
-    loss = float(((y - x) ** 2).sum() / denom)
-    dy = 2.0 * (y - x) / denom
+    n, length, _ = x.shape
+    loss = float(((y - x) ** 2).mean())
+    dy = 2.0 * (y - x) / x.size
     dzd = dy * y * (1.0 - y)
     grads = {
         "dense_W": np.einsum("nlu,nlf->uf", h4, dzd),
@@ -198,150 +187,3 @@ def train_lstm_autoencoder(
                 break
     return LSTMAutoencoder(best[1]), history
 
-
-# ------------------------------------------------------- distributed
-
-def _pack(weights: dict) -> np.ndarray:
-    """Flatten a weights/grads dict into one float64 vector (keys in
-    sorted order) for compact Arrow transport."""
-    return np.concatenate([weights[k].ravel() for k in sorted(weights)])
-
-
-def _unpack(vec: np.ndarray, template: dict) -> dict:
-    out = {}
-    ofs = 0
-    for k in sorted(template):
-        size = template[k].size
-        out[k] = vec[ofs : ofs + size].reshape(template[k].shape)
-        ofs += size
-    return out
-
-
-def _batch_tensor(pdf) -> np.ndarray:
-    """(rows of array<array<double>> 'features') -> (n, L, F) float64."""
-    return np.array(
-        [np.array([np.asarray(r) for r in w]) for w in pdf["features"]],
-        dtype="float64",
-    )
-
-
-def train_lstm_autoencoder_distributed(
-    windows,  # DataFrame with a 'features' column: array<array<double>>
-    epochs: int = 50,
-    lr: float = 0.001,
-    patience: int = 10,
-    val=None,  # optional DataFrame, same shape; defaults to `windows`
-    units: tuple[int, int] = (64, 32),
-    seed: int = 20240613,
-) -> tuple[LSTMAutoencoder, list[float]]:
-    """Data-parallel BPTT: per-partition gradients on the cluster,
-    Adam on the driver (SURVEY §2.7-M4 at engine scale).
-
-    The same shape as ``train.train_linear_autoencoder_distributed``:
-    per epoch ONE ``mapInPandas`` job runs :func:`loss_and_grads` on
-    each Arrow batch with the GLOBAL element count as denominator and
-    yields the packed partial-gradient vector; the driver sums partials
-    and applies the identical Adam update as
-    :func:`train_lstm_autoencoder`.  A second lightweight job computes
-    the post-update validation loss (forward pass only) driving the
-    same early-stop / best-restore logic.  Gradient partial-sums are
-    mathematically the full-batch gradient — the only divergence from
-    the driver path is float summation order
-    (tests/test_lstm_train.py pins the two paths together on the
-    fixture).
-    """
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(windows.sparkSession)
-    persisted = windows.select("features").persist()
-    val_persisted = (
-        persisted if val is None else val.select("features").persist()
-    )
-    try:
-        first = persisted.first()["features"]
-        length, n_features = len(first), len(first[0])
-        n_rows = persisted.count()
-        denom = float(n_rows * length * n_features)
-        if val_persisted is persisted:
-            denom_val = denom
-        else:
-            denom_val = float(
-                val_persisted.count() * length * n_features
-            )
-
-        weights = init_weights(n_features, units=units, seed=seed)
-        grad_schema = "grads array<double>, loss_part double"
-        loss_schema = "sq_sum double"
-
-        def epoch_grads(w_now: dict):
-            def partials(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    x = _batch_tensor(pdf)
-                    loss_part, grads = loss_and_grads(w_now, x, denom)
-                    yield pd.DataFrame(
-                        {"grads": [_pack(grads).tolist()],
-                         "loss_part": [loss_part]}
-                    )
-
-            parts = persisted.mapInPandas(partials, grad_schema).toPandas()
-            gsum = np.sum(
-                [np.array(v, dtype="float64") for v in parts["grads"]],
-                axis=0,
-            )
-            return _unpack(gsum, w_now), float(parts["loss_part"].sum())
-
-        def val_loss(w_now: dict):
-            def partials(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    x = _batch_tensor(pdf)
-                    y, _ = forward_with_caches(w_now, x)
-                    yield pd.DataFrame(
-                        {"sq_sum": [float(((y - x) ** 2).sum())]}
-                    )
-
-            parts = val_persisted.mapInPandas(partials, loss_schema)
-            return float(parts.toPandas()["sq_sum"].sum() / denom_val)
-
-        m = {k: np.zeros_like(v) for k, v in weights.items()}
-        v2 = {k: np.zeros_like(vv) for k, vv in weights.items()}
-        beta1, beta2, eps = 0.9, 0.999, 1e-7  # Keras Adam defaults
-        best = (np.inf, {k: w.copy() for k, w in weights.items()})
-        history: list[float] = []
-        stale = 0
-        step = 0
-        for _ in range(epochs):
-            grads, _ = epoch_grads(weights)
-            step += 1
-            for k in weights:
-                m[k] = beta1 * m[k] + (1 - beta1) * grads[k]
-                v2[k] = beta2 * v2[k] + (1 - beta2) * grads[k] ** 2
-                m_hat = m[k] / (1 - beta1**step)
-                v_hat = v2[k] / (1 - beta2**step)
-                weights[k] = weights[k] - lr * m_hat / (
-                    np.sqrt(v_hat) + eps
-                )
-            vloss = val_loss(weights)
-            history.append(vloss)
-            if vloss < best[0] - 1e-12:
-                best = (
-                    vloss,
-                    {k: w.copy() for k, w in weights.items()},
-                )
-                stale = 0
-            else:
-                stale += 1
-                if stale >= patience:
-                    break
-        return LSTMAutoencoder(best[1]), history
-    finally:
-        persisted.unpersist()
-        if val_persisted is not persisted:
-            val_persisted.unpersist()

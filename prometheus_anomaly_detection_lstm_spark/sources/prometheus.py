@@ -1,22 +1,16 @@
 """Prometheus range-query source (SURVEY §2.1-S1..S5, §4-O1..O3).
 
-Two layers, both network-free-testable:
-
-1. :func:`parse_response_df` — decode raw ``/api/v1/query_range`` JSON
-   bodies already sitting in a DataFrame column (S3): ``from_json`` +
-   ``explode`` + cast, with the first-series rule (S4) and string->double
-   coercion (P2) as Catalyst expressions.  This is the path the
-   FIXTURES-F2 tests exercise.
-
-2. :class:`PrometheusDataSource` — a Spark 4 Python DataSource whose
-   reader plans ONE InputPartition PER (query, time-chunk) (O1: the
-   reference's 1-hour chunk granularity, data_collector.py:85-111,
-   becomes the unit of scan parallelism) and fetches over HTTP inside
-   the executor.  PromQL stays opaque — ``rate()``/``sum by()`` run
-   inside Prometheus (O2, the source-pushdown analog).  A deterministic
-   per-chunk JSON file cache (S5: keyed by query+range+step like the
-   reference's diskcache, data_collector.py:34-40) makes re-reads
-   idempotent and cheap.
+:class:`PrometheusDataSource` is a Spark 4 Python DataSource whose
+reader plans ONE InputPartition PER (query, time-chunk) (O1: the
+reference's 1-hour chunk granularity, data_collector.py:85-111, becomes
+the unit of scan parallelism) and fetches over HTTP inside the
+executor.  PromQL stays opaque — ``rate()``/``sum by()`` run inside
+Prometheus (O2, the source-pushdown analog).  A deterministic per-chunk
+JSON file cache (S5: keyed by query+range+step like the reference's
+diskcache, data_collector.py:34-40) makes re-reads idempotent and
+cheap.  The batch and stream readers decode every response with
+:func:`_rows_from_payload` (S4 first-series rule, P2 numeric
+coercion), which is network-free-testable on its own (FIXTURES F2).
 
 Register with ``spark.dataSource.register(PrometheusDataSource)`` then::
 
@@ -36,98 +30,16 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
-
-#: /api/v1/query_range response schema (data_collector.py:57-68).
-RESPONSE_SCHEMA = T.StructType(
-    [
-        T.StructField("status", T.StringType()),
-        T.StructField("errorType", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField(
-            "data",
-            T.StructType(
-                [
-                    T.StructField("resultType", T.StringType()),
-                    T.StructField(
-                        "result",
-                        T.ArrayType(
-                            T.StructType(
-                                [
-                                    T.StructField(
-                                        "metric",
-                                        T.MapType(
-                                            T.StringType(), T.StringType()
-                                        ),
-                                    ),
-                                    T.StructField(
-                                        "values",
-                                        T.ArrayType(
-                                            T.ArrayType(T.StringType())
-                                        ),
-                                    ),
-                                ]
-                            )
-                        ),
-                    ),
-                ]
-            ),
-        ),
-    ]
-)
-
-
-def parse_response_df(
-    responses: DataFrame,
-    body_col: str = "body",
-    alias_col: str = "query_alias",
-    first_series_only: bool = True,
-) -> DataFrame:
-    """Raw JSON bodies -> long samples (metric, series_idx, ts, value).
-
-    Decode chain (all Catalyst): from_json -> posexplode(result) ->
-    explode(values) -> epoch cast (P3) + numeric coercion (P2: try_cast
-    yields NULL on unparseable values, same as pd.to_numeric coerce).
-    Error-status responses and empty results vanish via the explode.
-    The first-series rule (S4) keeps series_idx 0 only
-    (data_collector.py:71-75 warns and takes result[0]).
-    """
-    parsed = responses.withColumn(
-        "__r", F.from_json(F.col(body_col), RESPONSE_SCHEMA)
-    ).filter(F.col("__r.status") == "success")
-    series = parsed.select(
-        F.col(alias_col).alias("metric"),
-        F.posexplode_outer("__r.data.result").alias("series_idx", "series"),
-    )
-    if first_series_only:
-        series = series.filter(F.col("series_idx") == 0)
-    samples = series.select(
-        "metric",
-        "series_idx",
-        F.explode("series.values").alias("sample"),
-    )
-    return samples.select(
-        "metric",
-        "series_idx",
-        F.timestamp_seconds(
-            F.element_at("sample", 1).cast("double")
-        ).alias("ts"),
-        F.element_at("sample", 2)
-        .try_cast("double")
-        .alias("value"),
-    )
-
 
 def _chunks(
     start: int, end: int, chunk_seconds: int, step: int = 0
@@ -253,7 +165,13 @@ def _fetch_payload(
 
 def _rows_from_payload(payload: dict, alias: str, first_series_only: bool):
     """Decode one response payload into (metric, series_idx, ts, value)
-    rows — S4 first-series rule + P2 numeric coercion."""
+    rows — S4 first-series rule + P2 numeric coercion.
+
+    Unparseable values and ``"NaN"`` both decode to NULL: the reference's
+    ``pd.to_numeric(errors='coerce')`` NaN counts as missing in pandas,
+    and only a NULL reaches the ffill/bfill step (a double NaN would
+    poison the column's MinMax range).  ``±Inf`` keeps its float value.
+    Error-status and empty responses yield no rows."""
     if payload.get("status") != "success":
         return
     result = payload.get("data", {}).get("result", [])
@@ -265,6 +183,8 @@ def _rows_from_payload(payload: dict, alias: str, first_series_only: bool):
                 v = float(val)
             except (TypeError, ValueError):
                 v = None  # P2 coercion
+            if v is not None and math.isnan(v):
+                v = None
             yield (
                 alias,
                 idx,

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.autoencoder import StubAutoencoder
+from ..ml.infer import reconstruction_errors
 from .exporter import DetectorMetrics
 
 
@@ -47,8 +48,8 @@ class DetectorConfig:
     threshold: float | None = 0.0013
     interval_seconds: int = 30
     scaler_params: pd.DataFrame | None = None  # feature -> (min, max)
-    #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub,
-    #: a trained LinearAutoencoder, or the NumPy LSTM (ml/lstm_np.py)
+    #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub
+    #: or the trained NumPy LSTM (ml/lstm_np.py)
     model: object = field(default_factory=StubAutoencoder)
     #: SPOT calibrator used when ``threshold`` is None.
     spot: "object" = None
@@ -118,10 +119,9 @@ def run_detection_cycle(
     tail = aligned.tail(cfg.sequence_length)  # U5 (:210)
     seq = _prep_window(tail, cfg)
     try:
-        recon = cfg.model.predict(seq)
-        err = seq - recon
-        mse = float((err * err).mean())
-        feat_mse = (err * err).mean(axis=(0, 1))
+        window_mse, feature_mse = reconstruction_errors(cfg.model, seq)
+        mse = float(window_mse[0])
+        feat_mse = feature_mse[0]
     except Exception:
         sinks.latest_mse.set(-1.0)  # sentinel (M6, :339-348)
         sinks.is_anomaly.set(0.0)

@@ -58,9 +58,11 @@ def test_predict_shape_range_determinism():
     np.testing.assert_array_equal(y1, y2)  # frozen weights, bit-identical
 
 
-def test_npz_roundtrip():
+def test_npz_roundtrip(tmp_path):
     model = LSTMAutoencoder(init_weights(5))
-    back = LSTMAutoencoder.from_npz_bytes(model.to_npz_bytes())
+    path = str(tmp_path / "weights.npz")
+    model.save(path)
+    back = LSTMAutoencoder.load(path)
     x = np.random.default_rng(2).uniform(0, 1, (4, 6, 5))
     np.testing.assert_array_equal(model.predict(x), back.predict(x))
 

@@ -81,34 +81,3 @@ def test_early_stopping_restores_best():
     final = float(((y - x) ** 2).mean())
     assert final == pytest.approx(min(hist), abs=1e-12)
 
-
-def test_distributed_training_matches_driver(spark):
-    """Per-partition gradients + driver Adam == driver-side full-batch
-    training on the fixture (float summation order is the only
-    divergence; the histories and weights pin together tightly)."""
-    from prometheus_anomaly_detection_lstm_spark.ml.lstm_train import (
-        train_lstm_autoencoder_distributed,
-    )
-
-    rng = np.random.default_rng(11)
-    base = rng.uniform(0.2, 0.8, (2, 5, 3))
-    x = np.concatenate(
-        [base + rng.normal(0, 0.01, base.shape) for _ in range(6)]
-    )
-    driver_model, driver_hist = train_lstm_autoencoder(
-        x, epochs=8, lr=0.02, patience=8, units=(4, 2)
-    )
-    rows = [(int(i), [list(map(float, step)) for step in w])
-            for i, w in enumerate(x)]
-    windows = spark.createDataFrame(
-        rows, "window_id bigint, features array<array<double>>"
-    ).repartition(4)
-    dist_model, dist_hist = train_lstm_autoencoder_distributed(
-        windows, epochs=8, lr=0.02, patience=8, units=(4, 2)
-    )
-    assert len(driver_hist) == len(dist_hist)
-    np.testing.assert_allclose(driver_hist, dist_hist, rtol=1e-9)
-    for k in driver_model.w:
-        np.testing.assert_allclose(
-            dist_model.w[k], driver_model.w[k], rtol=1e-7, atol=1e-10
-        )

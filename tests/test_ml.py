@@ -1,5 +1,5 @@
 """ML pipeline tests: split semantics, distributed inference parity,
-training determinism, threshold fitting."""
+the Keras gate."""
 
 from __future__ import annotations
 
@@ -8,18 +8,13 @@ import datetime
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from prometheus_anomaly_detection_lstm_spark.ml.autoencoder import (
     StubAutoencoder,
     build_lstm_autoencoder,
 )
 from prometheus_anomaly_detection_lstm_spark.ml.infer import score_windows
 from prometheus_anomaly_detection_lstm_spark.ml.train import (
-    LinearAutoencoder,
     collect_windows,
-    fit_threshold,
-    train_linear_autoencoder,
     train_val_split,
 )
 from prometheus_anomaly_detection_lstm_spark.operators.windows import (
@@ -73,52 +68,7 @@ def test_distributed_scoring_matches_driver(windows_df):
     np.testing.assert_allclose(got_feat, expected_feat, rtol=1e-12)
 
 
-def test_training_is_deterministic(windows_df):
-    x = collect_windows(windows_df)
-    m1, h1 = train_linear_autoencoder(x, epochs=30)
-    m2, h2 = train_linear_autoencoder(x, epochs=30)
-    assert h1 == h2
-    np.testing.assert_array_equal(m1.a, m2.a)
-    # training reduces loss and early-stopping restores the best epoch
-    assert h1[-1] <= h1[0]
-    assert min(h1) == pytest.approx(
-        float(np.mean((x * m1.a + m1.b - x) ** 2))
-    )
-
-
-def test_model_roundtrip(tmp_path, windows_df):
-    x = collect_windows(windows_df)
-    model, _ = train_linear_autoencoder(x, epochs=5)
-    p = str(tmp_path / "w.npz")
-    model.save(p)
-    loaded = LinearAutoencoder.load(p)
-    np.testing.assert_array_equal(model.a, loaded.a)
-
-
-def test_fit_threshold_percentile(windows_df):
-    scored = score_windows(windows_df, StubAutoencoder)
-    thr = fit_threshold(scored.select("mse"), 0.95)
-    n = scored.count()
-    above = scored.filter(F.col("mse") > thr).count()
-    assert above <= max(1, int(0.06 * n))
-
-
 def test_keras_gate_raises_without_tf():
     with pytest.raises(NotImplementedError):
         build_lstm_autoencoder(20, 18)
 
-
-def test_distributed_training_matches_driver(windows_df):
-    from prometheus_anomaly_detection_lstm_spark.ml.train import (
-        train_linear_autoencoder_distributed,
-    )
-
-    x = collect_windows(windows_df)
-    m_drv, h_drv = train_linear_autoencoder(x, epochs=15, patience=50)
-    m_dist, h_dist = train_linear_autoencoder_distributed(
-        windows_df, epochs=15, patience=50
-    )
-    # same math, different partial-sum order -> equal to float tolerance
-    np.testing.assert_allclose(m_dist.a, m_drv.a, rtol=1e-9)
-    np.testing.assert_allclose(m_dist.b, m_drv.b, rtol=1e-9, atol=1e-12)
-    np.testing.assert_allclose(h_dist, h_drv, rtol=1e-9)

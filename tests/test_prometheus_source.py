@@ -1,4 +1,4 @@
-"""Prometheus source tests: JSON decode operators (FIXTURES F2 cases)
+"""Prometheus source tests: the response decoder (FIXTURES F2 cases)
 and the Python DataSource against a stub HTTP server — no real network.
 """
 
@@ -13,7 +13,7 @@ import pytest
 
 from prometheus_anomaly_detection_lstm_spark.sources.prometheus import (
     PrometheusDataSource,
-    parse_response_df,
+    _rows_from_payload,
 )
 
 
@@ -38,32 +38,37 @@ FIX = [
     ("empty", _body([])),
     # error status
     ("bad", json.dumps({"status": "error", "errorType": "timeout", "error": "x"})),
-    # unparseable value -> NULL (P2)
-    ("nan", _body([{"metric": {}, "values": [[1704067200, "abc"], [1704067320, "NaN"]]}])),
+    # unparseable value and "NaN" -> NULL (P2); Inf stays a float
+    ("nan", _body([{"metric": {}, "values": [
+        [1704067200, "abc"], [1704067320, "NaN"], [1704067440, "+Inf"],
+    ]}])),
 ]
 
 
-def test_parse_response_decode(spark):
-    df = spark.createDataFrame(FIX, ["query_alias", "body"])
-    out = parse_response_df(df).orderBy("metric", "ts").collect()
+def _decode(first_series_only=True):
     by_metric = {}
-    for r in out:
-        by_metric.setdefault(r.metric, []).append(r)
-    assert [r.value for r in by_metric["cpu"]] == [1.5, 2.5]
-    assert by_metric["cpu"][0].ts.isoformat() == "2024-01-01T00:00:00"
+    for alias, body in FIX:
+        for metric, idx, ts, value in _rows_from_payload(
+            json.loads(body), alias, first_series_only
+        ):
+            by_metric.setdefault(metric, []).append((idx, ts, value))
+    return by_metric
+
+
+def test_parse_response_decode():
+    by_metric = _decode()
+    assert [v for _, _, v in by_metric["cpu"]] == [1.5, 2.5]
+    assert by_metric["cpu"][0][1].isoformat() == "2024-01-01T00:00:00"
     # first-series only
-    assert [r.value for r in by_metric["mem"]] == [10.0]
+    assert [v for _, _, v in by_metric["mem"]] == [10.0]
     # empty + error responses produce no rows
     assert "empty" not in by_metric and "bad" not in by_metric
-    # coercion to NULL, rows kept ("NaN" parses to float NaN)
-    nan_vals = [r.value for r in by_metric["nan"]]
-    assert nan_vals[0] is None
+    # coercion to NULL, rows kept
+    assert [v for _, _, v in by_metric["nan"]] == [None, None, float("inf")]
 
 
-def test_parse_multi_series_kept_when_disabled(spark):
-    df = spark.createDataFrame(FIX, ["query_alias", "body"])
-    out = parse_response_df(df, first_series_only=False)
-    assert out.filter("metric = 'mem'").count() == 2
+def test_parse_multi_series_kept_when_disabled():
+    assert [idx for idx, _, _ in _decode(False)["mem"]] == [0, 1]
 
 
 class _StubProm(BaseHTTPRequestHandler):
