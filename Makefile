@@ -4,7 +4,7 @@
 CONFIG ?= config.yaml
 SF ?= /root/testdata/sf0.01
 
-.PHONY: collect preprocess train filter detect test parity sweep hygiene bench clean
+.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo clean
 
 collect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli collect --config $(CONFIG)

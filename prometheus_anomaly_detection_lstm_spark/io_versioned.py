@@ -120,8 +120,8 @@ def commit_append(
     df: DataFrame, table: str, meta: dict | None = None
 ) -> int:
     """New version = parent's files + this frame's files.  ``meta``
-    key/values land in the manifest (e.g. the streaming ingest's
-    transactional (app, batch) idempotence token)."""
+    key/values land in the manifest (e.g. an (app, batch) idempotence
+    token a writer checks before re-committing a replayed batch)."""
     return _commit(table, df, "append", meta)
 
 

@@ -1,15 +1,13 @@
-"""Autoencoder models: deterministic stub + optional Keras LSTM.
+"""Deterministic stub autoencoder.
 
 The reference trains a Keras LSTM autoencoder
 (train_autoencoder.py:76-91: LSTM 64→32→RepeatVector→32→64→
-TimeDistributed(Dense sigmoid)).  TensorFlow is not available in this
-environment and Keras training is not bit-reproducible anyway (SURVEY
-H5), so:
-
-* :class:`StubAutoencoder` — the correctness-test model (FIXTURES F6):
-  X̂ = clip01(A·x + b) per feature, exactly recomputable in SQL/DuckDB.
-* :func:`build_lstm_autoencoder` — the faithful Keras architecture,
-  gated behind an import-try; raises a clear error when TF is absent.
+TimeDistributed(Dense sigmoid)).  This package trains and runs that
+architecture in pure NumPy (ml/lstm_train.py, ml/lstm_np.py) and reads
+the reference's saved Keras weights without TensorFlow
+(ml/keras_bridge.py).  :class:`StubAutoencoder` is the correctness-test
+model (FIXTURES F6): X̂ = clip01(A·x + b) per feature, exactly
+recomputable in SQL/DuckDB.
 
 Inference at scale runs through ml/infer.py (Arrow-batched mapInPandas
 with broadcast weights); the stub's scoring additionally factors into
@@ -47,41 +45,3 @@ class StubAutoencoder:
         err = x - self.predict(x)
         return (err * err).mean(axis=1)
 
-
-def build_lstm_autoencoder(
-    sequence_length: int,
-    num_features: int,
-    encoder_units: tuple[int, int] = (64, 32),
-    learning_rate: float = 0.001,
-):
-    """The reference's Keras architecture (train_autoencoder.py:76-91).
-
-    Requires TensorFlow; unavailable in this image -> informative error.
-    Training stays on the driver (the reference's workload is ~8k
-    windows, SURVEY §6); data prep and scoring are the distributed parts.
-    """
-    try:
-        from tensorflow import keras
-        from tensorflow.keras import layers
-    except ImportError as exc:  # pragma: no cover - TF absent in CI image
-        raise NotImplementedError(
-            "TensorFlow/Keras is not installed in this environment; "
-            "use StubAutoencoder for deterministic scoring, or install "
-            "tensorflow to train the LSTM architecture."
-        ) from exc
-
-    e1, e2 = encoder_units
-    inputs = keras.Input(shape=(sequence_length, num_features))
-    x = layers.LSTM(e1, activation="relu", return_sequences=True)(inputs)
-    x = layers.LSTM(e2, activation="relu", return_sequences=False)(x)
-    x = layers.RepeatVector(sequence_length)(x)
-    x = layers.LSTM(e2, activation="relu", return_sequences=True)(x)
-    x = layers.LSTM(e1, activation="relu", return_sequences=True)(x)
-    outputs = layers.TimeDistributed(
-        layers.Dense(num_features, activation="sigmoid")
-    )(x)
-    model = keras.Model(inputs, outputs)
-    model.compile(
-        optimizer=keras.optimizers.Adam(learning_rate=learning_rate), loss="mse"
-    )
-    return model

@@ -2,7 +2,7 @@
 
 AQE's skew-join handling (on in session.py) splits oversized sort-merge
 partitions automatically — the first line of defense.  Salting is the
-MANUAL fallback for the cases AQE cannot rewrite: streaming/stateful
+MANUAL fallback for the cases AQE cannot rewrite: stateful streaming
 joins, aggregations feeding a stateful operator, or engines/modes where
 runtime re-planning is unavailable.
 

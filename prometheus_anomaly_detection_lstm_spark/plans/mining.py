@@ -817,14 +817,13 @@ PSI_QS = tuple(round(0.1 * i, 1) for i in range(1, 10))
 #: Laplace smoothing keeping ln() finite on empty buckets.
 PSI_SMOOTH = 0.5
 #: bucket count implied by the edge list — derived ONCE so the batch
-#: operator, its oracle and the streaming twin can never disagree.
+#: operator and its oracle can never disagree.
 PSI_N_BUCKETS = len(PSI_QS) + 1
 
 
 def psi_bucket_expr(edges_col: str):
     """0-based PSI bucket of ``value`` against the quantile-edge array
-    column — THE bucketization, shared by the batch drift operator and
-    both streaming-profile sites so edge semantics cannot drift."""
+    column — THE bucketization of the batch drift operator."""
     return sum(
         F.when(F.col("value") > F.col(edges_col)[i], 1).otherwise(0)
         for i in range(len(PSI_QS))

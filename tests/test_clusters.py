@@ -9,6 +9,7 @@ from prometheus_anomaly_detection_lstm_spark.operators.clusters import (
     dedup_clusters,
 )
 from prometheus_anomaly_detection_lstm_spark.operators.dedup import (
+    dedup_apply,
     minhash_lsh_dedup,
 )
 from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
@@ -53,6 +54,35 @@ def test_chain_collapses_to_one_cluster(spark):
     out = dedup_clusters(df).collect()
     assert len(out) == 1
     assert out[0].size == 4 and out[0].keep_doc_id == 0
+
+    # dedup_apply keeps the same min-id representative on the documents
+    # themselves: every exact-copy clique collapses to its lowest doc_id
+    doc_a = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm stone wall near the old garden gate"
+    )
+    doc_b = (
+        "completely different content about spark shuffles partitions "
+        "joins aggregates and the catalyst optimizer rewriting plans"
+    )
+    doc_c = (
+        "yet another unrelated document discussing parquet footers row "
+        "groups statistics and predicate pushdown at the scan layer"
+    )
+    doc_d = "a fresh short document about versioned manifests " * 4
+    doc_e = "final unique text never seen before in any corpus " * 3
+    doc_f = "one more genuinely novel document closing the stream " * 4
+    docs = spark.createDataFrame(
+        [
+            (1, doc_a), (2, doc_b), (3, doc_c), (11, doc_a), (12, doc_d),
+            (21, doc_d), (22, doc_e), (31, doc_e), (32, doc_f),
+            (33, doc_f), (34, doc_b),
+        ],
+        "doc_id long, text string",
+    )
+    pairs = minhash_lsh_dedup(docs, threshold=0.5)
+    kept = sorted(r.doc_id for r in dedup_apply(docs, pairs).collect())
+    assert kept == [1, 2, 3, 12, 22, 32]
 
 
 def test_clusters_over_real_minhash_pairs(spark):

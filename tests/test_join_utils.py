@@ -1,15 +1,13 @@
-"""Skew/co-location mechanisms: result equivalence + plan shape."""
+"""Co-location mechanisms: bucketed joins and day-partitioned sinks
+(plan shape)."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
 from prometheus_anomaly_detection_lstm_spark.operators.join_utils import (
     bucketed_join_ready,
-    salted_join,
     write_bucketed,
 )
 
@@ -18,26 +16,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_salted_join_equals_plain(spark):
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = (
-        li.join(orders, "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 6).alias("q"))
-    )
-    salted = (
-        salted_join(li, orders, "l_orderkey", salt=8)
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 6).alias("q"))
-    )
-    a = {(r.l_orderkey, r.n, r.q) for r in plain.collect()}
-    b = {(r.l_orderkey, r.n, r.q) for r in salted.collect()}
-    assert a == b
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

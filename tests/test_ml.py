@@ -1,5 +1,4 @@
-"""ML pipeline tests: split semantics, distributed inference parity,
-the Keras gate."""
+"""ML pipeline tests: split semantics, distributed inference parity."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 
 from prometheus_anomaly_detection_lstm_spark.ml.autoencoder import (
     StubAutoencoder,
-    build_lstm_autoencoder,
 )
 from prometheus_anomaly_detection_lstm_spark.ml.infer import score_windows
 from prometheus_anomaly_detection_lstm_spark.ml.train import (
@@ -66,9 +64,4 @@ def test_distributed_scoring_matches_driver(windows_df):
     np.testing.assert_allclose(got_mse, expected_mse, rtol=1e-12)
     got_feat = np.array([scored[i].feature_mse for i in ids])
     np.testing.assert_allclose(got_feat, expected_feat, rtol=1e-12)
-
-
-def test_keras_gate_raises_without_tf():
-    with pytest.raises(NotImplementedError):
-        build_lstm_autoencoder(20, 18)
 

@@ -6,6 +6,8 @@ asserts gauge values, counter monotonicity, and every guard path.
 
 from __future__ import annotations
 
+import os
+import time
 import urllib.request
 
 import numpy as np
@@ -16,6 +18,7 @@ from prometheus_anomaly_detection_lstm_spark.streaming.detector import (
     DetectorConfig,
     run_detection_cycle,
     run_detector_on_batch,
+    start_streaming_detector,
 )
 from prometheus_anomaly_detection_lstm_spark.streaming.exporter import (
     DetectorMetrics,
@@ -148,6 +151,42 @@ def test_streaming_query_end_to_end(spark, cfg, tmp_path):
     q.awaitTermination(120)
     assert sinks.total_anomalies.value() >= 1.0
     assert sinks.last_success.value() is not None
+
+
+def test_start_streaming_detector_scores_file_stream(spark, cfg, tmp_path):
+    """The production entry point: a processing-time query over a live
+    parquet file stream sets the same MSE gauge as a direct cycle."""
+    staging, src = tmp_path / "staging", tmp_path / "live"
+    src.mkdir()
+    spark.createDataFrame(_cycle(0, L + 2)).coalesce(1).write.parquet(
+        str(staging)
+    )
+    rows = spark.read.parquet(str(staging))
+    want = run_detection_cycle(rows.toPandas(), cfg, DetectorMetrics())
+    assert want is not None
+    cfg.interval_seconds = 1
+    sinks = DetectorMetrics()
+    q = start_streaming_detector(
+        spark,
+        spark.readStream.schema(rows.schema).parquet(str(src)),
+        cfg,
+        sinks,
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        # a rename lands the file whole, as a scraper's writer would
+        (part,) = [f for f in os.listdir(staging) if f.endswith(".parquet")]
+        os.rename(staging / part, src / part)
+        deadline = time.monotonic() + 60
+        while (
+            sinks.latest_mse.value() is None
+            and q.isActive
+            and time.monotonic() < deadline
+        ):
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert sinks.latest_mse.value() == want["mse"]
 
 
 def test_exporter_http_exposition():

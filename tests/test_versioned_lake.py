@@ -19,8 +19,8 @@ def _df(spark, lo, hi):
 @pytest.fixture()
 def table(spark, tmp_path):
     t = str(tmp_path / "tbl")
-    assert V.commit_append(_df(spark, 0, 10), t) == 1
-    assert V.commit_append(_df(spark, 10, 15), t) == 2
+    assert V.commit_append(_df(spark, 0, 10), t, meta={"batch": 0}) == 1
+    assert V.commit_append(_df(spark, 10, 15), t, meta={"batch": 1}) == 2
     return t
 
 
@@ -29,6 +29,8 @@ def test_time_travel_reads_each_snapshot(spark, table):
     assert V.read_version(spark, table, 2).count() == 15
     assert V.read_version(spark, table).count() == 15  # latest
     assert V.latest_version(table) == 2
+    # commit meta (a writer's idempotence token) lands in each manifest
+    assert [V.read_manifest(table, v)["batch"] for v in (1, 2)] == [0, 1]
 
 
 def test_overwrite_replaces_visible_files_not_history(spark, table):
