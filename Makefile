@@ -4,7 +4,7 @@
 CONFIG ?= config.yaml
 SF ?= /root/testdata/sf0.01
 
-.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo clean
+.PHONY: collect preprocess train filter detect test parity sweep hygiene shuffle-audit zoo clean
 
 collect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli collect --config $(CONFIG)
@@ -39,17 +39,9 @@ sweep:
 hygiene:
 	python -m pytest tests/test_plan_hygiene.py -q
 
-bench:
-	python bench.py
-
 # per-query bytes-moved audit from event-log task metrics (BASELINE.md)
 shuffle-audit:
 	python tools/shuffle_audit.py
-
-# same-minute DuckDB anchors for any query list (round-10 protocol;
-# defaults to the ratio-weak text/corpus/DSPOT set at sf0.1)
-anchors:
-	python tools/inrun_anchor_sweep.py $(QUERIES)
 
 # labeled detector scorecard: point spikes / level shift (+GLR
 # localization) / slot contamination / slow ramp

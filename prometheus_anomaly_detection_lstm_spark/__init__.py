@@ -9,7 +9,7 @@ realtime detector.
 
 Layout:
     operators/   alignment, fill, scaling, windowing, scoring, dedup,
-                 similarity, text analysis, multimodal plumbing
+                 similarity, text analysis
     sources/     Prometheus HTTP range source (Spark 4 Python DataSource)
     functions/   small reusable column expressions
     plans/       composed end-to-end pipelines + relational benchmark queries

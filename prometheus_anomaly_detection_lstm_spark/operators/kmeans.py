@@ -509,8 +509,8 @@ PQ_SEARCH_M = 16  # subspaces for the search path (finer than the codes op)
 PQ_SEARCH_K = 16  # codewords per subspace
 PQ_TRAIN_ITERS = 3  # per-subspace Lloyd refinements
 PQ_RERANK = 20  # shortlist factor for the exact rerank stage
-# (was 5: recall@10 measured 0.72 at sf0.1 — below the 0.8 floor the
-# bench now asserts in-run; 20 measures 0.92 there and the shortlist is
+# (was 5: recall@10 measured 0.72 at sf0.1 — below the 0.8 floor
+# tests/test_kmeans.py pins; 20 measures 0.92 there and the shortlist is
 # still only k*20 rows/query into the exact rerank, corpus-independent)
 
 
@@ -983,8 +983,8 @@ SELECT q_id, c_id, round(cosine, 6) AS cosine, rk FROM (
 
 
 # approximate vs brute force but deterministic end to end: hash oracle
-# since round 9 (recall floor still pinned in tests/test_kmeans.py and
-# asserted in-run by bench.py, same policy as ann_cosine_topk_lsh/_ivf)
+# since round 9 (recall floor still pinned in tests/test_kmeans.py,
+# same policy as ann_cosine_topk_lsh/_ivf)
 QUERIES["ann_cosine_topk_pq"] = (q_ann_cosine_topk_pq, _pq_topk_oracle())
 
 

@@ -120,75 +120,3 @@ def decode_ihdr(data: bytes) -> tuple[int, int]:
     assert data[12:16] == b"IHDR"
     width, height = struct.unpack(">II", data[16:24])
     return width, height
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_rgb(data: bytes) -> tuple[int, int, bytes]:
-    """Decode an 8-bit RGB PNG -> (width, height, raw RGB bytes).
-
-    A real (not stubbed) decoder for the most common PNG shape:
-    bit depth 8, color type 2 (truecolor), no interlace — all five
-    scanline filters (None/Sub/Up/Average/Paeth) per the public spec.
-    Raises ValueError on other PNG flavors so callers can gate.
-    """
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG")
-    pos = 8
-    width = height = None
-    idat = b""
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        if tag == b"IHDR":
-            width, height, depth, ctype, comp, filt, inter = struct.unpack(
-                ">IIBBBBB", payload
-            )
-            if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
-                raise ValueError(
-                    f"unsupported PNG flavor: depth={depth} color={ctype} "
-                    f"interlace={inter}"
-                )
-        elif tag == b"IDAT":
-            idat += payload
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    if width is None:
-        raise ValueError("missing IHDR")
-    raw = zlib.decompress(idat)
-    stride = 3 * width
-    if len(raw) != height * (stride + 1):
-        raise ValueError("IDAT size mismatch")
-    out = bytearray(height * stride)
-    prev = bytearray(stride)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        line = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ftype == 1:  # Sub
-            for i in range(3, stride):
-                line[i] = (line[i] + line[i - 3]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - 3] if i >= 3 else 0
-                line[i] = (line[i] + (left + prev[i]) // 2) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - 3] if i >= 3 else 0
-                upleft = prev[i - 3] if i >= 3 else 0
-                line[i] = (line[i] + _paeth(left, prev[i], upleft)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown filter type {ftype}")
-        out[y * stride : (y + 1) * stride] = line
-        prev = line
-    return width, height, bytes(out)

@@ -114,8 +114,8 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority"""
 
 #: bucket count for the q3 bucketed-lake layout (matches the local
 #: shuffle-partition scale; on a real cluster this is sized so one
-#: bucket ~ one task's worth of fact rows — bench.py's sf1 section
-#: passes 32 for the 10x-larger facts on the same principle).
+#: bucket ~ one task's worth of fact rows; 32 suits the 10x-larger
+#: sf1 facts on the same principle).
 Q3_BUCKETS = 8
 
 
@@ -131,8 +131,7 @@ def q_tpch_q3_bucketed(
     (``bucketBy(orderkey) + sortBy``); every later q3-shaped join on
     orderkey then plans with zero fact-side exchanges.  The one-time
     bucketing write is the layout cost a 100-TB lake pays at ingest,
-    not per query — bench.py reports it separately
-    (``tpch_q3_bucketed_write_sec``).  The query logic itself is the
+    not per query.  The query logic itself is the
     UNCHANGED :func:`tpch_q3_core`, so the oracle is ORACLE_TPCH_Q3.
     """
     import os
@@ -150,8 +149,7 @@ def q_tpch_q3_bucketed(
     # live under the temp dir, so a persisted metastore can outlive a
     # cleaned /tmp — a catalog-only check would then plan over a
     # missing path (and report a ~0 s "write cost" on a warm
-    # metastore).  bench.py additionally drops both tables up front so
-    # its reported write cost is always the true one-time layout cost.
+    # metastore).
     def _missing(tbl: str) -> bool:
         return not spark.catalog.tableExists(tbl) or not os.path.isdir(
             os.path.join(root, tbl)

@@ -507,8 +507,7 @@ PRIORITY: list[str] = [
     "union_periods", "backfill_missing", "numeric_coercion",
     "text_token_counts", "text_lang_id", "text_fingerprints",
     "text_winnowing_fingerprints", "text_pii_redact", "text_quality_scores",
-    "multimodal_binary_metadata", "multimodal_decode_stub",
-    "multimodal_frame_sample", "corpus_hash_sample", "corpus_doc_chunks",
+    "corpus_hash_sample", "corpus_doc_chunks",
     "corpus_doc_packing", "corpus_dup_span_removal", "corpus_bpe_encode",
     "corpus_bpe_packing", "per_feature_mse", "asof_join", "dedup_exact",
     "dedup_simhash", "dedup_simhash_pairs", "embedding_norms",
@@ -557,7 +556,7 @@ PRIORITY: list[str] = [
     "embedding_logreg_fit", "embedding_matryoshka_eval",
     "embedding_ridge_fit", "embedding_whiten", "events_bot_cadence",
     "events_dau_wau", "events_markov_next_eval", "metric_cusum_anomalies",
-    "metric_periodogram", "metric_theil_sen_trend", "multimodal_phash_dedup",
+    "metric_periodogram", "metric_theil_sen_trend",
     "parts_abc_by_brand", "promql_lang_error_ratio",
     "promql_lang_histogram_quantile", "promql_lang_increase_filter",
     "promql_lang_label_replace", "promql_lang_quantile_over_time",
@@ -576,7 +575,7 @@ PRIORITY: list[str] = [
     "metric_sax_similar_days", "dedup_hot_shingles",
     "orders_km_reorder_curve", "events_ab_cuped", "events_ab_power",
     "metric_df_stationarity", "metric_matrix_profile",
-    "multimodal_audio_features", "metric_spectral_residual",
+    "metric_spectral_residual",
     "metric_holt_winters", "metric_pca_scores", "tpch_q3_bucketed",
     "promql_holt_smoothing", "metric_ramp_detect", "events_ab_sequential",
     "metric_glr_changepoint", "corpus_dedup_e2e_stats",
@@ -597,7 +596,7 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     )
     from .operators import (
         approx, bpe, corpus, dedup, kmeans, linalg, matrixprofile,
-        profile, promql, promql_lang, similarity, text, multimodal,
+        profile, promql, promql_lang, similarity, text,
     )
     from .ml import lstm_query
 
@@ -624,7 +623,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     merged.update(dedup.QUERIES)
     merged.update(similarity.QUERIES)
     merged.update(text.QUERIES)
-    merged.update(multimodal.QUERIES)
     merged.update(corpus.QUERIES)
     merged.update(lstm_query.QUERIES)
     merged.update(bpe.QUERIES)

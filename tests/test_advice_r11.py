@@ -49,23 +49,6 @@ def test_registry_pq_stamp_includes_build_recipe():
     assert "pq_build_recipe()" in src
 
 
-def test_bench_stamp_includes_build_recipe():
-    import inspect
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    sys.path.insert(0, str(repo))
-    try:
-        import bench
-    finally:
-        sys.path.pop(0)
-    src = inspect.getsource(bench._ann_prebuilt_section)
-    for token in ("pq_build_recipe()", "ivf_build_recipe(", "lsh_build_recipe("):
-        assert token in src
-    assert "{**base, **build_recipe}" in src
-
-
 def test_build_lsh_index_rejects_remote_path_before_work(spark):
     emb = spark.range(0).select(
         F.col("id").alias("vec_id"),

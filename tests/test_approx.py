@@ -48,21 +48,3 @@ def test_histogram_png_renders_without_matplotlib(spark, tmp_path):
     save_histogram_png(hist, str(out))
     data = out.read_bytes()
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
-
-
-def test_frame_sample_stub(spark):
-    from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
-    from prometheus_anomaly_detection_lstm_spark.operators.multimodal import (
-        as_binary_table,
-        frame_sample,
-    )
-
-    media = as_binary_table(load_table(spark, SF, "documents"))
-    frames = frame_sample(media, every_n=4)
-    rows = frames.collect()
-    assert rows and all(r.frame_idx % 4 == 0 for r in rows)
-    # one input doc fans out to multiple frames
-    per_doc = {}
-    for r in rows:
-        per_doc[r.media_id] = per_doc.get(r.media_id, 0) + 1
-    assert max(per_doc.values()) > 1

@@ -26,7 +26,6 @@ NEW_QUERIES = [
     "promql_lang_quantile_over_time",
     "promql_lang_label_replace",
     "metric_matrix_profile",
-    "multimodal_audio_features",
     "text_nb_confusion",
     "parts_abc_by_brand",
     "shipping_delay_profile",

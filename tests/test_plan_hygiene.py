@@ -99,3 +99,10 @@ def test_every_registered_query_meets_the_plan_floor(spark):
         ):
             failures.append(f"{name}: unlisted BroadcastNestedLoopJoin")
     assert not failures, "\n".join(failures)
+
+
+def test_bnlj_allowlist_names_live_rows():
+    # a stale entry would silently permit a BNLJ for any future row
+    # that reuses the name
+    stale = BNLJ_SCALAR_BROADCASTS - set(all_queries())
+    assert not stale, f"allowlisted names with no registry row: {sorted(stale)}"

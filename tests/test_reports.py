@@ -12,14 +12,27 @@ from prometheus_anomaly_detection_lstm_spark.plans.reports import (
 )
 
 
+def _scanlines(data: bytes) -> bytes:
+    idat_start = data.index(b"IDAT") + 4
+    idat_len = int.from_bytes(data[idat_start - 12 : idat_start - 8], "big")
+    return zlib.decompress(data[idat_start : idat_start + idat_len])
+
+
 def _assert_valid_png(data: bytes, width: int, height: int) -> None:
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
     assert P.decode_ihdr(data) == (width, height)
     # IDAT decompresses to exactly height * (1 + 3*width) filtered bytes
-    idat_start = data.index(b"IDAT") + 4
-    idat_len = int.from_bytes(data[idat_start - 12 : idat_start - 8], "big")
-    raw = zlib.decompress(data[idat_start : idat_start + idat_len])
-    assert len(raw) == height * (1 + 3 * width)
+    assert len(_scanlines(data)) == height * (1 + 3 * width)
+
+
+def test_encode_png_keeps_every_pixel():
+    raster = [[(x, y, (x * y) % 256) for x in range(9)] for y in range(5)]
+    data = P.encode_png(raster)
+    assert P.decode_ihdr(data) == (9, 5)
+    # filter type 0 (None) rows carry the pixels verbatim
+    assert _scanlines(data) == b"".join(
+        b"\x00" + bytes(c for px in row for c in px) for row in raster
+    )
 
 
 def test_bar_chart_png_valid():

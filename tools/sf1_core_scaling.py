@@ -4,8 +4,8 @@ sf0.1 saturates at <=8 cores (BENCH_r12 scaling block: no headline
 query runs measurably faster on 32 than 8), so the r12 verdict asked
 for the scaling measurement at sf1 where the heavy rows have real
 parallel work.  Runs the five heavy shapes at the core count given by
-$SPARK_GRAFT_CPUS (master local[N], shuffle.partitions=N — the same
-contract as bench.py) and prints one JSON line.  Invoke twice
+$SPARK_GRAFT_CPUS (master local[N], shuffle.partitions=N, as
+session.get_spark sets them) and prints one JSON line.  Invoke twice
 (SPARK_GRAFT_CPUS=8 / 32) from separate processes; a row whose
 8-core/32-core ratio stays ~1.0 at sf1 is a genuine serialization
 finding (guide §2).

@@ -5,7 +5,6 @@ per-stage overhead and the crossover sits near sf1; this measures it.
 
     python tools/sf1_crossover.py gen     # build /tmp/crossover/sf1
     python tools/sf1_crossover.py duck    # time DuckDB on it
-    SPARK_GRAFT_SF_DIR=/tmp/crossover/sf1 python bench.py   # Spark side
 
 ``gen`` replicates the sf0.1 tables 10x with DISTINCT keys so join
 fan-outs, group cardinalities and duplicate-group sizes grow
@@ -43,7 +42,7 @@ OFF = 1_000_000_000
 #: standalone headline queries timed on the DuckDB side from their
 #: registry oracles verbatim.  The four pipeline-derived entries are
 #: timed separately (see ``duck``) through a shared materialized prep
-#: table — the EXACT shape bench.py times on the Spark side (prep
+#: table — the shape the Spark pipeline materializes (prep
 #: persists once; mse/minmax/split consume the cache), so every basket
 #: line is now apples-to-apples including pipeline_prep (round-4
 #: verdict task 5: prep and mse were previously conflated).
@@ -117,7 +116,7 @@ def duck(src: str = OUT_DIR, sf: float = 1.0) -> None:
         timings[name] = round(best, 3)
         print(f"{name}: {timings[name]}", flush=True)
 
-    # ---- shared pipeline, bench.py's exact shape: materialize the
+    # ---- shared pipeline, the Spark pipeline's shape: materialize the
     # aligned->filled->scaled frame ONCE, then the three consumers
     # read the materialization (Spark persists; DuckDB temp-tables)
     prep_sql = O.pipeline_prefix("scaled") + "\nSELECT * FROM scaled"

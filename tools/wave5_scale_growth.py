@@ -98,17 +98,12 @@ def main() -> None:
         bench("log_odds_keywords", wave5.log_odds_keywords(docs))
         bench("bloom_decontaminate", wave5.bloom_decontaminate(docs))
 
-        from prometheus_anomaly_detection_lstm_spark.operators import multimodal as M
         from prometheus_anomaly_detection_lstm_spark.operators.dedup import (
             related_docs_topk,
         )
 
         bench("pointintime_features", wave5.pointintime_features(ev))
         bench("churn_labels", wave5.churn_labels(orders))
-        bench(
-            "phash_dedup",
-            M.phash_near_dup_pairs(M.as_binary_table(docs)),
-        )
         bench("related_docs_topk", related_docs_topk(docs))
 
         for f in (ev, ev_series, docs, orders, li):
